@@ -38,7 +38,7 @@ object Pipeline {
     /** Release every cached intermediate. */
     def unpersistAll(): Unit = {
       chunks.unpersist(); mentions.unpersist(); triples.unpersist()
-      entities.unpersist(); dupPairs.unpersist(); mapping.unpersist()
+      entities.unpersist(); dupPairs.unpersist()
     }
   }
 
@@ -74,15 +74,9 @@ object Pipeline {
     val components = ConnectedComponents.run(spark,
       dupPairs.select(col("id1"), col("id2")))
     val nodes = Canonicalize.nodes(entities, components)
-    // persisted (lazily — the first rewrite's broadcast build materializes
-    // it, the second reads the cache): both endpoint rewrites broadcast
-    // this table, and without the cache each broadcast build re-runs the
-    // mapping's two joins against the FULL entity table — the merged
-    // subset is orders of magnitude smaller than what computes it. Session
-    // lifetime matches the other pipeline caches (Result.unpersistAll
-    // releases it).
+    // driver-local: computed once here, so neither rewrite re-runs its
+    // joins against the full entity table nor carries that lineage
     val mapping = Canonicalize.mapping(entities, components)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val edges = Canonicalize.rewriteTriples(spark, triples, mapping)
     val mentionsFinal = Canonicalize.rewriteMentions(mentions, mapping)
     Result(chunks, mentions, triples, entities, dupPairs, components,

@@ -100,9 +100,9 @@ object ConsolidateJob {
           col("prior_merged")))))
       .drop("prior_merged")
 
-    // persisted across the two rewrite commits (same rationale as
-    // Pipeline.fromChunks); released with the other loop caches below
-    val mapping = Canonicalize.mapping(entities, components).persist()
+    // driver-local (Canonicalize.mapping collects it), so the two rewrite
+    // commits below share it without re-running its joins
+    val mapping = Canonicalize.mapping(entities, components)
     val edges = Canonicalize.rewriteTriples(spark,
       io.read(spark, "edges").drop("bucket"), mapping)
     val mentions = Canonicalize.rewriteMentions(
@@ -114,7 +114,6 @@ object ConsolidateJob {
       mentions.withColumn("bucket",
         pmod(xxhash64(col("doc_id")), lit(a.buckets))),
       Seq("bucket"), stage = "consolidate")
-    mapping.unpersist()
     dupPairs.unpersist()
     System.err.println(s"[consolidate] committed snapshots: nodes=" +
       s"${io.currentSnapshotId("nodes").get} edges=" +

@@ -2,7 +2,6 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Pipeline
 import graft.canon.{Canonicalize, ConnectedComponents}
@@ -141,11 +140,9 @@ object IngestJob {
       Canonicalize.nodes(entities, components)
     }
 
-    // persisted: both rewrite stages broadcast the mapping, and each
-    // stage commit would otherwise re-run its joins against the full
-    // entity table (same rationale as Pipeline.fromChunks)
+    // driver-local (Canonicalize.mapping collects it): neither rewrite
+    // stage's commit re-runs its joins against the full entity table
     val mapping = Canonicalize.mapping(entities, components)
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     stage(io, spark, "edges", a.resume, Seq("pred")) {
       Canonicalize.rewriteTriples(spark, triples, mapping)
@@ -154,7 +151,6 @@ object IngestJob {
     stage(io, spark, "mentions_final", a.resume, Seq("bucket")) {
       withBucket(Canonicalize.rewriteMentions(mentions, mapping), a.buckets)
     }
-    mapping.unpersist()
 
     io
   }

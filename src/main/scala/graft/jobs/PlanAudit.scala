@@ -8,7 +8,8 @@ import graft.SparkEntry
 /** Physical-plan audit: for every SparkEntry query, print whether the plan
   * (a) pushes filters into the parquet scan, (b) prunes the read schema,
   * (c) broadcast-joins its small sides, (d) stays inside whole-stage
-  * codegen. Planning only — no jobs run.
+  * codegen, and (e) how long its extended explain string is (`planChars`
+  * — what every action re-prints, so lineage growth shows here).
   *
   * Usage: PlanAudit [sfDir]
   */
@@ -51,13 +52,16 @@ object PlanAudit {
             .findFirstMatchIn(formatted).map(_.group(1)).getOrElse("")
           val nScanCols = if (readSchema.isEmpty) -1
             else readSchema.split(",").length
+          val planChars = qe.explainString(
+            org.apache.spark.sql.execution.ExtendedMode).length
           val bhj = physical.contains("BroadcastHashJoin")
           val smj = physical.contains("SortMergeJoin")
           // whole-stage codegen spans render as "*(n)" operator prefixes
           val wsc = """\*\((\d+)\)""".r.findAllMatchIn(physical)
             .map(_.group(1)).toSet.size
           println(f"$name%-22s pushedFilters=$pushed%-5s scanCols=$nScanCols%-3d " +
-            f"bcastJoin=$bhj%-5s sortMergeJoin=$smj%-5s codegenSpans=$wsc%d")
+            f"bcastJoin=$bhj%-5s sortMergeJoin=$smj%-5s codegenSpans=$wsc%-3d " +
+            f"planChars=$planChars%d")
         } catch {
           case e: Throwable =>
             println(f"$name%-22s AUDIT-ERROR ${e.getMessage.take(80)}")

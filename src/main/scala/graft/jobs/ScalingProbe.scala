@@ -74,7 +74,6 @@ object ScalingProbe {
       val n = Canonicalize.nodes(entities, components); n.count(); n
     }
     val mapping = Canonicalize.mapping(entities, components)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     timeSec("edges") {
       Canonicalize.rewriteTriples(spark, triples, mapping).count()
     }

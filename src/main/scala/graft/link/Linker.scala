@@ -139,12 +139,15 @@ object Linker {
     // pass broadcastFeatures=false when the entity table itself outgrows
     // executor memory — the id-keyed join is uniform, so the shuffle path
     // has no skew.
-    // checkpointed so the per-entity featUdf pass runs once, not once per
-    // broadcast build (the id1 and id2 joins each build their own
-    // broadcast relation — the alias-renamed projections defeat exchange
-    // reuse — but both now read the same materialized feature blocks)
+    // Not checkpointed: both joins below reference this one frame, so over
+    // an uncached entity table (IngestJob reads it back from its committed
+    // stage) the second join's exchange, broadcast or shuffle, is a
+    // ReusedExchange of the first and featUdf runs once. Over a cached
+    // entity table (Pipeline.fromChunks) AQE gives each reference's scan
+    // its own TableCacheQueryStage, so the small feature relation is built
+    // twice. An eager checkpoint here kept reuse there but ran a job at
+    // plan-construction time and left blocks only GC released.
     val featTable = e.select(col("entity_id"), featUdf(col("name")).as("feat"))
-      .localCheckpoint(true)
     val feats = if (broadcastFeatures) broadcast(featTable) else featTable
     val blockSlack = Const.EmbThreshold * Const.BlockingSlack
     // the two feature joins reference the SAME unaliased `feats` frame and

@@ -61,44 +61,63 @@ object GraphSearch {
       .orderBy(col("score").desc, col("chunk_id").asc)
       .limit(topK)
 
-  /** Undirected (src,dst) pairs from the canonical edge table. */
+  /** Undirected (src,dst) pairs from the canonical edge table: both
+    * orientations, self-loops dropped on the RAW names (so "Acme" → "ACME"
+    * stays). A narrow view — no distinct: callers first restrict it to a
+    * broadcast frontier or vertex set and deduplicate only what survives.
+    */
   def undirected(edges: DataFrame): DataFrame = {
     val fwd = edges.select(col("subj").as("src"), col("obj").as("dst"))
     fwd.union(edges.select(col("obj").as("src"), col("subj").as("dst")))
       .where(col("src") =!= col("dst"))
-      .distinct()
+  }
+
+  /** Breadth-first frontier expansion over `undirected(edges)` from
+    * `seeds`, matching names case-insensitively. Element d-1 is hop d: the
+    * (raw dst, lowercase key) pairs whose key no earlier hop (nor a seed)
+    * reached — distinct raw spellings of one key reached at the same hop
+    * all stay. The iterator ends once a hop reaches nothing new.
+    *
+    * Each hop is one driver round-trip: the previous hop's keys ship as a
+    * broadcast LocalRelation, only the matched rows are deduplicated, and
+    * the new frontier comes back to the driver — so no hop re-evaluates
+    * the hops before it, no graph-wide table is built, and nothing is
+    * cached past the call. The frontier is seed-neighbourhood-bounded
+    * (callers take at most 3 hops).
+    */
+  def frontiers(edges: DataFrame, seeds: Set[String]): Iterator[Seq[(String, String)]] = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val und = undirected(edges)
+    // lowercased by Spark (a local projection, no job) so seed keys and
+    // edge keys share one case mapping
+    val start = seeds.toSeq.toDF("name").select(lower(col("name"))).collect()
+      .map(_.getString(0)).toSet
+    Iterator.unfold((start, start)) { case (seen, frontier) =>
+      if (frontier.isEmpty) None
+      else {
+        val hop = und
+          .join(broadcast(frontier.toSeq.toDF("key")), lower(col("src")) === col("key"))
+          .select(col("dst"), lower(col("dst"))).distinct().collect()
+          .map(r => (r.getString(0), r.getString(1))).filterNot(e => seen(e._2)).toSeq
+        val keys = hop.map(_._2).toSet
+        Some((hop, (seen ++ keys, keys)))
+      }
+    }
   }
 
   /** Bounded BFS: entities within `depth` hops of `name`, with min path
     * length (graph_search.py:242-309, graph/queries.py:23-57). depth ≤ 3 —
-    * each hop is one join + one min-aggregation, never an unbounded iterate.
+    * one `frontiers` hop each, never an unbounded iterate. Entities keep
+    * their stored spelling; each is reported at the first hop reaching
+    * its lowercase name.
     */
   def relatedEntities(spark: SparkSession, edges: DataFrame, name: String,
       depth: Int = 2): DataFrame = {
     import spark.implicits._
-    val und = undirected(edges).persist()
-    var frontier = Seq(name.toLowerCase).toDF("entity").withColumn("dist", lit(0))
-    var reached = frontier
-    for (d <- 1 to depth) {
-      frontier = frontier
-        .join(und, lower(und("src")) === lower(frontier("entity")))
-        .select(col("dst").as("entity"))
-        .distinct()
-        .join(reached.select(col("entity").as("seen")),
-          lower(col("entity")) === lower(col("seen")), "left_anti")
-        .withColumn("dist", lit(d))
-      // eager localCheckpoint per hop (the CC-loop pattern): materializes
-      // NOW — so the und persist is actually reused across hops and can be
-      // released below — truncates the lineage (reached appears twice per
-      // hop; un-truncated, the final plan duplicated it 2^depth times),
-      // and its blocks are GC-cleaned, unlike the per-hop .persist() this
-      // replaces, which marked frames no action ever cached and leaked the
-      // marks for the session
-      reached = reached.unionByName(frontier).localCheckpoint()
-    }
-    und.unpersist()
-    reached.where(col("dist") > 0)
-      .groupBy(col("entity")).agg(min(col("dist")).as("distance"))
+    frontiers(edges, Set(name)).take(depth).zipWithIndex
+      .flatMap { case (hop, i) => hop.map { case (raw, _) => (raw, i + 1) } }
+      .toSeq.toDF("entity", "distance")
       .orderBy(col("distance").asc, col("entity").asc)
   }
 
@@ -107,10 +126,12 @@ object GraphSearch {
     */
   def cooccurringEntities(mentions: DataFrame, name: String,
       minShared: Int = 2, topK: Int = 10): DataFrame = {
+    // one entity's chunk set: broadcast, so the mention table is never
+    // shuffled by chunk_id (documentSimilarityGraph does the same)
     val target = mentions.where(lower(col("entity_name")) === name.toLowerCase)
       .select(col("chunk_id")).distinct()
     mentions
-      .join(target, Seq("chunk_id"), "left_semi")
+      .join(broadcast(target), Seq("chunk_id"), "left_semi")
       .where(lower(col("entity_name")) =!= name.toLowerCase)
       .groupBy(col("entity_name"), col("entity_type"))
       .agg(countDistinct(col("chunk_id")).as("shared_chunks"))
@@ -155,30 +176,16 @@ object GraphSearch {
 
   /** Shortest undirected path length a→b, bounded at maxHops
     * (graph/operations.py:532-567 shortestPath *1..3). Returns an empty
-    * frame when no path within the bound. BFS from the smaller frontier —
-    * each hop is one join.
+    * frame when no path within the bound. BFS via `frontiers`, stopping at
+    * the first hop that reaches b.
     */
   def shortestPathLength(spark: SparkSession, edges: DataFrame, a: String,
       b: String, maxHops: Int = 3): DataFrame = {
     import spark.implicits._
-    val und = undirected(edges).persist()
-    var frontier = Seq(a.toLowerCase).toDF("entity")
-    var visited = frontier
-    var found = -1
-    var d = 0
-    while (found < 0 && d < maxHops) {
-      d += 1
-      frontier = frontier
-        .join(und, lower(und("src")) === lower(frontier("entity")))
-        .select(lower(col("dst")).as("entity")).distinct()
-        .join(visited.select(col("entity").as("seen")),
-          col("entity") === col("seen"), "left_anti")
-      if (frontier.where(col("entity") === b.toLowerCase).limit(1).count() > 0)
-        found = d
-      visited = visited.unionByName(frontier)
-    }
-    und.unpersist()
-    Seq((a, b, found)).toDF("src", "dst", "path_length")
+    val target = b.toLowerCase
+    val found = frontiers(edges, Set(a)).take(maxHops)
+      .indexWhere(_.exists(_._2 == target))
+    Seq((a, b, if (found < 0) -1 else found + 1)).toDF("src", "dst", "path_length")
       .where(col("path_length") > 0)
   }
 

@@ -38,37 +38,31 @@ object Ppr {
   }
 
   /** Induced subgraph: undirected edges within `depth` hops of the seeds
-    * (ppr_traversal.py:261-335).
+    * (ppr_traversal.py:261-335), lowercased and deduplicated.
     *
-    * Physical shape: the undirected edge table is lowercased ONCE and
-    * localCheckpoint'ed — it is referenced depth+1 times (each hop's
-    * frontier expansion plus the final induction semi-joins), and without
-    * the checkpoint every reference re-evaluates the union/distinct AND
-    * drags the caller's full upstream construct DAG through the optimizer
-    * for every AQE stage (measured: 53 s cold → ~3 s for the whole
-    * subgraph build on the kg_ppr_dist gate query). The reach frontier is
-    * seed-neighborhood-bounded and checkpointed per hop, so AQE sees its
-    * true (small) size and picks broadcast joins against the edge table —
-    * the edge side is never reshuffled.
+    * Physical shape: the reach set comes from `GraphSearch.frontiers` —
+    * one driver round-trip per hop with the frontier broadcast — so no
+    * graph-wide undirected/distinct table is built or cached per call.
+    * The returned frame is lazy: the narrow edge view semi-joined against
+    * the broadcast reach set on both endpoints, deduplicated only after
+    * that cut (the subgraph, not the edge table, is shuffled).
     */
   def inducedSubgraph(edges: DataFrame, seedDf: DataFrame,
       depth: Int = 2): DataFrame = {
-    val und = GraphSearch.undirected(edges)
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // deduplicated on the driver: over the LocalRelation `search` passes,
+    // a projection collects without a job, a distinct would run one
+    val seedKeys = seedDf.select(lower(col("name"))).collect()
+      .map(_.getString(0)).toSet
+    val reach = seedKeys ++
+      GraphSearch.frontiers(edges, seedKeys).take(depth).flatMap(_.map(_._2))
+    val r = reach.toSeq.toDF("e")
+    GraphSearch.undirected(edges)
       .select(lower(col("src")).as("src"), lower(col("dst")).as("dst"))
+      .join(broadcast(r.select(col("e").as("e1"))), col("src") === col("e1"), "left_semi")
+      .join(broadcast(r.select(col("e").as("e2"))), col("dst") === col("e2"), "left_semi")
       .distinct()
-      .localCheckpoint(true)
-    var reach = seedDf.select(lower(col("name")).as("entity")).distinct()
-      .localCheckpoint(true)
-    for (_ <- 1 to depth) {
-      val next = und.join(reach, und("src") === reach("entity"))
-        .select(col("dst").as("entity"))
-      reach = reach.union(next).distinct().localCheckpoint(true)
-    }
-    val r1 = reach.select(col("entity").as("e1"))
-    val r2 = reach.select(col("entity").as("e2"))
-    und.join(r1, und("src") === col("e1"), "left_semi")
-      .join(r2, und("dst") === col("e2"), "left_semi")
-      .select(col("src"), col("dst"))
   }
 
   /** Edge cap under which the induced subgraph is pulled to the driver and
@@ -131,23 +125,33 @@ object Ppr {
       seedDf: DataFrame, localEdgeCap: Long = LocalEdgeCap,
       broadcastVertexCap: Long = BroadcastVertexCap): DataFrame = {
     import spark.implicits._
-    val seedSet = seedDf.select(lower(col("name")).as("entity")).distinct()
-      .persist()
-    val nSeeds = seedSet.count()
-    if (nSeeds == 0) return Seq.empty[(String, Double)].toDF("entity", "ppr")
-
-    val edgeCount = subgraph.count()
-    if (edgeCount <= localEdgeCap) {
+    // ONE bounded collect per input decides the path and, under the cap,
+    // already holds the data (was a count then a collect on each). Seeds
+    // are deduplicated on the driver, as in inducedSubgraph.
+    val bound = math.min(localEdgeCap, Int.MaxValue - 1L).toInt + 1
+    val seedRows = seedDf.select(lower(col("name"))).limit(bound).collect()
+    val seeds = seedRows.map(_.getString(0)).distinct
+    if (seeds.isEmpty) return Seq.empty[(String, Double)].toDF("entity", "ppr")
+    val allSeeds = seedRows.length < bound
+    val edgeRows = subgraph.select(col("src"), col("dst")).limit(bound).collect()
+    if (edgeRows.length < bound && allSeeds) {
       // sorted so the serial iteration's double-sum order is independent of
       // partition collect order (bit-reproducible across runs and vs the
       // serial oracle)
-      val edges = subgraph.select(col("src"), col("dst")).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
-      val seeds = seedSet.collect().map(_.getString(0)).toSet
-      seedSet.unpersist()
-      return serialScores(edges, seeds).toSeq.toDF("entity", "ppr")
+      val edges = edgeRows.map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+      return serialScores(edges, seeds.toSet).toSeq.toDF("entity", "ppr")
         .orderBy(col("ppr").desc, col("entity").asc)
     }
+    val seedSet = seedDf.select(lower(col("name")).as("entity")).distinct()
+    val nSeeds = if (allSeeds) seeds.length.toLong else seedSet.count()
+
+    // truncate the loop-invariant inputs' lineage BEFORE iterating: the
+    // caller's subgraph/seed plans can embed the entire upstream construct
+    // DAG, and every iteration's actions would re-stringify that tree into
+    // the SQL-execution event (measured: minutes of driver CPU in
+    // generateTreeString at 20 iterations — the jobs themselves are tiny)
+    val sub = subgraph.select(col("src"), col("dst")).localCheckpoint(true)
+    val edgeCount = sub.count()
 
     // scope the loop's physical knobs to the data, not the session: the
     // induced subgraph is orders of magnitude smaller than the corpus, so
@@ -163,12 +167,6 @@ object Ppr {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
 
-    // truncate the loop-invariant inputs' lineage BEFORE iterating: the
-    // caller's subgraph/seed plans can embed the entire upstream construct
-    // DAG, and every iteration's actions would re-stringify that tree into
-    // the SQL-execution event (measured: minutes of driver CPU in
-    // generateTreeString at 20 iterations — the jobs themselves are tiny)
-    val sub = subgraph.select(col("src"), col("dst")).localCheckpoint(true)
     val seedsCk = seedSet.localCheckpoint(true)
     val vertices = sub.select(col("src").as("entity"))
       .union(sub.select(col("dst").as("entity")))
@@ -264,7 +262,6 @@ object Ppr {
         if (trace) println(f"ppr-bcast it=$it%2d delta=$delta%.3e " +
           f"${(System.nanoTime() - itT0) / 1e9}%.3f s")
       }
-      seedSet.unpersist()
       return joined.crossJoin(broadcast(Seq(l1m).toDF("l1")))
         .select(col("entity"), (col("raw") / col("l1")).as("ppr"))
         .orderBy(col("ppr").desc, col("entity").asc)
@@ -305,7 +302,7 @@ object Ppr {
       cur = next.persist()
       it += 1
     }
-    seedSet.unpersist(); vertices.unpersist()
+    vertices.unpersist()
     cur.select(col("entity"), col("score").as("ppr"))
       .orderBy(col("ppr").desc, col("entity").asc)
 
@@ -351,15 +348,20 @@ object Ppr {
     * join/distinct plan shapes whose planning+codegen dominates wall time
     * on small graphs. Chunk scoring stays distributed (mentions scale with
     * the corpus; the depth-bounded subgraph does not). Larger edge tables
-    * take the original distributed path with identical math.
+    * take the distributed path with identical math: `inducedSubgraph`'s
+    * per-hop frontier round-trips, then `scores`, whose bounded collect
+    * still iterates serially when the subgraph is under the cap. Neither
+    * path persists anything, so a call leaves no cached blocks behind.
     */
   def search(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       mentions: DataFrame, queryEntities: Seq[String],
       topK: Int = 10, localEdgeCap: Long = LocalEdgeCap): DataFrame = {
     import spark.implicits._
+    // seed names are a handful of substring matches: one collect serves
+    // both paths (downstream re-reads hit a LocalRelation, not the nodes)
+    val seedNames = seeds(nodes, queryEntities).collect().map(_.getString(0))
     if (edges.count() * 2 <= localEdgeCap) {
-      val seedNames = seeds(nodes, queryEntities).collect()
-        .map(_.getString(0).toLowerCase).toSet
+      val seedKeys = seedNames.map(_.toLowerCase).toSet
       // mirror GraphSearch.undirected + inducedSubgraph exactly: both
       // directions, raw src != dst, then lowercase
       val undL = edges.select(col("subj"), col("obj")).collect()
@@ -370,17 +372,16 @@ object Ppr {
         .filter(e => e._1 != e._2)
         .map(e => (e._1.toLowerCase, e._2.toLowerCase))
         .toVector
-      var reach = seedNames
+      var reach = seedKeys
       for (_ <- 1 to 2)
         reach = reach ++ undL.iterator.filter(e => reach(e._1)).map(_._2)
       val sub = undL.filter(e => reach(e._1) && reach(e._2)).distinct.sorted
-      val ppr = serialScores(sub, seedNames).toSeq
+      val ppr = serialScores(sub, seedKeys).toSeq
         .sortBy { case (e, s) => (-s, e) }.toDF("entity", "ppr")
       scoreChunks(mentions, ppr, topK = topK)
     } else {
-      val s = seeds(nodes, queryEntities).persist()
-      val sub = inducedSubgraph(edges, s).persist()
-      val ppr = scores(spark, sub, s, localEdgeCap)
+      val s = seedNames.toSeq.toDF("name")
+      val ppr = scores(spark, inducedSubgraph(edges, s), s, localEdgeCap)
       scoreChunks(mentions, ppr, topK = topK)
     }
   }

@@ -109,6 +109,31 @@ class ParitySpec extends AnyFunSuite {
       "custom gazetteer entries must be detected")
   }
 
+  test("canonical mapping is driver-local; no entities cache nests in the outputs") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    val mapping = graft.canon.Canonicalize.mapping(engine.entities, engine.components)
+    assert(mapping.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(mapping.count() > 0, "the fixture must merge something")
+    // every InMemoryRelation a plan reaches, through nested cached plans
+    object Aqe extends AdaptiveSparkPlanHelper
+    def cached(i: InMemoryRelation): Seq[InMemoryRelation] =
+      i +: Aqe.collect(i.cacheBuilder.cachedPlan: SparkPlan) {
+        case s: InMemoryTableScanExec => s.relation
+      }.flatMap(cached)
+    def nested(p: LogicalPlan) = p.collect { case i: InMemoryRelation => i }.flatMap(cached)
+    val entitiesCache = nested(engine.entities.queryExecution.withCachedData).head
+    for ((name, df) <- Seq("edges" -> engine.edges,
+        "mentionsFinal" -> engine.mentionsFinal)) {
+      val imrs = nested(df.queryExecution.withCachedData)
+      assert(imrs.nonEmpty, s"$name: expected the extraction caches")
+      assert(!imrs.exists(_.cacheBuilder eq entitiesCache.cacheBuilder),
+        s"$name nests the entities cache (${imrs.size} cached relations)")
+    }
+  }
+
   test("canonical nodes carry merge lineage and conserve mention counts") {
     val nodeRows = engine.nodes.select("entity_id", "mention_count", "merged_entity_ids")
       .collect()

@@ -27,6 +27,42 @@ class RetrievalSpec extends AnyFunSuite {
     ("carol", "works_at", "zeta")
   ).toDF("subj", "pred", "obj")
 
+  // the same graph plus stored-case variants: "Acme" -> "ACME" differs
+  // raw but collapses after lowercasing (a lowercase self-loop the raw
+  // src != dst filter keeps), and bob/carol also appear as BOB/Carol
+  private lazy val mixedEdges = edges.union(Seq(
+    ("Acme", "alias_of", "ACME"),
+    ("ACME", "owns", "Bolt"),
+    ("BOB", "knows", "Carol"),
+    ("zeta", "owns", "Yard")
+  ).toDF("subj", "pred", "obj"))
+
+  private lazy val mixedMentions = mentions.union(Seq(
+    ("c5", "d3", "ACME", "ORGANIZATION", 0, 1, 0.9),
+    ("c5", "d3", "Bolt", "PRODUCT", 4, 1, 0.7),
+    ("c4", "d2", "Carol", "PERSON", 3, 1, 0.6)
+  ).toDF("chunk_id", "doc_id", "entity_name", "entity_type", "position",
+    "mention_count", "confidence"))
+
+  private lazy val nodes = Seq(("e1", "acme", "ORGANIZATION"),
+    ("e2", "bob", "PERSON"), ("e3", "carol", "PERSON"),
+    ("e4", "zeta", "ORGANIZATION")).toDF("entity_id", "name", "entity_type")
+
+  private lazy val mixedNodes = nodes.union(Seq(("e5", "ACME", "ORGANIZATION"),
+    ("e6", "Bolt", "PRODUCT"), ("e7", "Yard", "LOCATION"))
+    .toDF("entity_id", "name", "entity_type"))
+
+  /** Plain-collections `Ppr.inducedSubgraph`: both orientations, raw
+    * src != dst, lowercase, `depth` hops from the seeds, distinct. */
+  private def inducedReference(es: Seq[(String, String)], seeds: Set[String],
+      depth: Int): Set[(String, String)] = {
+    val und = (es ++ es.map(_.swap)).filter(e => e._1 != e._2)
+      .map(e => (e._1.toLowerCase, e._2.toLowerCase))
+    var reach = seeds.map(_.toLowerCase)
+    for (_ <- 1 to depth) reach = reach ++ und.filter(e => reach(e._1)).map(_._2)
+    und.filter(e => reach(e._1) && reach(e._2)).toSet
+  }
+
   test("ANY/ALL entity search scores and relational division") {
     val any = GraphSearch.searchByEntitiesAny(spark, mentions,
       Seq("acme", "bob")).collect()
@@ -54,6 +90,17 @@ class RetrievalSpec extends AnyFunSuite {
     val rel3 = GraphSearch.relatedEntities(spark, edges, "acme", depth = 3)
       .collect().map(r => r.getAs[String]("entity") -> r.getAs[Int]("distance")).toMap
     assert(rel3 === Map("bob" -> 1, "carol" -> 2, "zeta" -> 3))
+    // case-insensitive matching, stored spellings out: the seed's own
+    // variants (Acme, ACME) never count as related, both spellings of a
+    // name first reached at one hop stay, and a name already reached is
+    // not reported again in another spelling (BOB after bob)
+    def related(d: Int) = GraphSearch.relatedEntities(spark, mixedEdges, "acme",
+      depth = d).collect().map(r => r.getAs[String]("entity") -> r.getAs[Int]("distance"))
+    assert(related(2).toSeq === Seq("Bolt" -> 1, "bob" -> 1, "Carol" -> 2, "carol" -> 2))
+    assert(related(3).toMap === Map("Bolt" -> 1, "bob" -> 1, "Carol" -> 2,
+      "carol" -> 2, "zeta" -> 3))
+    assert(GraphSearch.relatedEntities(spark, mixedEdges, "ACME", depth = 1)
+      .collect().map(_.getString(0)).toSet === Set("Bolt", "bob"))
   }
 
   test("shortest path length bounded at maxHops") {
@@ -62,6 +109,13 @@ class RetrievalSpec extends AnyFunSuite {
     assert(p.length === 1 && p.head.getAs[Int]("path_length") === 3)
     assert(GraphSearch.shortestPathLength(spark, edges, "acme", "zeta", 2)
       .collect().isEmpty)
+    def len(a: String, b: String, hops: Int) = GraphSearch.shortestPathLength(
+      spark, mixedEdges, a, b, hops).collect().map(_.getAs[Int]("path_length")).toSeq
+    assert(len("ACME", "bolt", 3) === Seq(1))
+    assert(len("Acme", "CAROL", 3) === Seq(2)) // acme-bob-carol
+    assert(len("acme", "Yard", 3).isEmpty)     // 4 hops away
+    assert(len("acme", "Yard", 4) === Seq(4))
+    assert(len("Acme", "ACME", 3).isEmpty)     // same name, not a path
   }
 
   test("document similarity graph by shared entities") {
@@ -138,16 +192,59 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("PPR search: driver-local fast path == forced-distributed path") {
-    val nodes = Seq(("e1", "acme", "ORGANIZATION"), ("e2", "bob", "PERSON"),
-      ("e3", "carol", "PERSON"), ("e4", "zeta", "ORGANIZATION"))
-      .toDF("entity_id", "name", "entity_type")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val local = rows(Ppr.search(spark, nodes, edges, mentions, Seq("acme")))
-    val dist = rows(Ppr.search(spark, nodes, edges, mentions, Seq("acme"),
-      localEdgeCap = 0L))
-    assert(local === dist)
-    assert(local.nonEmpty)
+    for ((ns, es, ms) <- Seq((nodes, edges, mentions),
+        (mixedNodes, mixedEdges, mixedMentions))) {
+      val local = rows(Ppr.search(spark, ns, es, ms, Seq("acme")))
+      // cap 0: distributed reach AND power iteration; cap 2|E|-1: the
+      // distributed reach with the subgraph iterated serially
+      for (cap <- Seq(0L, es.count() * 2 - 1))
+        assert(rows(Ppr.search(spark, ns, es, ms, Seq("acme"),
+          localEdgeCap = cap)) === local, s"cap=$cap")
+      assert(local.nonEmpty)
+    }
+  }
+
+  test("PPR induced subgraph == plain-collections reference, mixed case") {
+    val es = mixedEdges.select("subj", "obj").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    for (seeds <- Seq(Seq("acme"), Seq("ACME", "Acme"), Seq("yard"), Seq("nobody"));
+         depth <- 1 to 3) {
+      val got = Ppr.inducedSubgraph(mixedEdges, seeds.toDF("name"), depth)
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      assert(got.length === got.toSet.size, s"$seeds/$depth: duplicate edges")
+      assert(got.toSet === inducedReference(es, seeds.toSet, depth), s"$seeds/$depth")
+    }
+    // the collapsed alias survives as a lowercase self-loop
+    assert(inducedReference(es, Set("acme"), 1)("acme" -> "acme"))
+  }
+
+  test("retrieval calls leave no persisted blocks behind") {
+    // per-call, not global, accounting: only RDDs created after the call
+    // starts can be charged to it (blocks other suites leave, or the
+    // ContextCleaner frees meanwhile, cannot move the verdict)
+    val sc = spark.sparkContext
+    def leftover(call: => Unit): Set[Int] = {
+      val firstId = sc.emptyRDD[Int].id
+      call
+      (sc.getPersistentRDDs.keySet ++ sc.getRDDStorageInfo.map(_.id))
+        .filter(_ > firstId).toSet
+    }
+    val es = mixedEdges.count()
+    val calls = Seq[(String, () => Any)](
+      "Ppr.search local" -> (() => Ppr.search(spark, mixedNodes, mixedEdges,
+        mixedMentions, Seq("acme")).collect()),
+      "Ppr.search distributed" -> (() => Ppr.search(spark, mixedNodes, mixedEdges,
+        mixedMentions, Seq("acme"), localEdgeCap = es * 2 - 1).collect()),
+      "relatedEntities" -> (() => GraphSearch.relatedEntities(spark, mixedEdges,
+        "acme", depth = 3).collect()),
+      "searchByCooccurrence" -> (() => GraphSearch.searchByCooccurrence(spark,
+        mixedMentions, "bob", minShared = 1).collect()))
+    calls.foreach { case (name, call) =>
+      val left = leftover(call())
+      assert(left.isEmpty, s"$name left persisted RDDs $left")
+    }
   }
 
   test("PPR chunk scoring weights mentions by entity mass") {
